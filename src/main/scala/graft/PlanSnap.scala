@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.internal.SQLConf
+
 /** Per-query plan snapshots for the optimization rounds: writes
   * `explain("formatted")` of each named query to
   * `plans/<tag>/<query>_<suffix>.txt`, so before/after plan diffs are
@@ -18,8 +20,12 @@ object PlanSnap {
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Sessions.build()
-    val dir = Paths.get(s"/root/repo/plans/$tag")
+    // Spark's own (unbounded) plan-string length in place of the
+    // session's 32 KB cap: a snapshot is only worth diffing whole.
+    val spark = Sessions.build(extraConfigs = Map(
+      SQLConf.MAX_PLAN_STRING_LENGTH.key ->
+        SQLConf.MAX_PLAN_STRING_LENGTH.defaultValueString))
+    val dir = Paths.get("plans", tag)
     Files.createDirectories(dir)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

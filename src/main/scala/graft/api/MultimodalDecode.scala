@@ -116,13 +116,20 @@ object MultimodalDecode {
     * audio (RIFF/WAVE, FORM/AIFF, .snd) can never be MIDI, so the MIDI
     * reader is ordered last and skipped outright for RIFF/FORM payloads
     * — the non-MIDI readers reject genuinely-MIDI bytes first under
-    * AudioSystem's own semantics, so outcomes are unchanged.
+    * AudioSystem's own semantics, so outcomes are unchanged. The reader
+    * is identified once, here, into two pick lists; a JDK that names it
+    * differently loses the skip (and the decode speed), so that is
+    * logged rather than silent.
     */
-  private val audioReadersOrdered
-      : Array[javax.sound.sampled.spi.AudioFileReader] = {
+  private val (audioReadersMidiLast, audioReadersNoMidi) = {
     val (midi, rest) = audioReaders.partition(
       _.getClass.getName.contains("SoftMidiAudioFileReader"))
-    rest ++ midi
+    if (midi.isEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "no SoftMidiAudioFileReader among the audio providers " +
+          audioReaders.map(_.getClass.getName).mkString("[", ", ", "]") +
+          ": RIFF/FORM payloads will probe every provider")
+    (rest ++ midi, rest)
   }
   private def looksRiffOrForm(c: Array[Byte]): Boolean =
     c.length >= 4 &&
@@ -134,17 +141,15 @@ object MultimodalDecode {
     */
   private def audioStream(c: Array[Byte])
       : javax.sound.sampled.AudioInputStream = {
-    val skipMidi = looksRiffOrForm(c)
+    val readers =
+      if (looksRiffOrForm(c)) audioReadersNoMidi else audioReadersMidiLast
     var i = 0
-    while (i < audioReadersOrdered.length) {
-      val r = audioReadersOrdered(i)
-      if (!(skipMidi &&
-          r.getClass.getName.contains("SoftMidiAudioFileReader"))) {
-        try return r.getAudioInputStream(new java.io.ByteArrayInputStream(c))
-        catch {
-          case _: javax.sound.sampled.UnsupportedAudioFileException |
-               _: java.io.IOException => ()
-        }
+    while (i < readers.length) {
+      try return readers(i).getAudioInputStream(
+        new java.io.ByteArrayInputStream(c))
+      catch {
+        case _: javax.sound.sampled.UnsupportedAudioFileException |
+             _: java.io.IOException => ()
       }
       i += 1
     }

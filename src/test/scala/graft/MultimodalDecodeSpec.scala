@@ -932,4 +932,42 @@ class MultimodalDecodeSpec extends SparkSpec {
       graft.api.MediaIn(2L, audioOnly, "video/mp4"))
     assert(a.ok && a.width === 0 && a.height === 0)
   }
+
+  test("mediaPayloads spreads a single-split scan and leaves an already " +
+      "split one unshuffled, with the same payloads as a direct map") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val p = spark.sparkContext.defaultParallelism
+    val payload = (id: Long) => graft.api.MediaIn(id,
+      MultimodalDecode.encodeSrt(id, nCues = 1 + (id % 3).toInt), "text/srt")
+    def rows(ds: org.apache.spark.sql.Dataset[graft.api.MediaIn]) =
+      ds.collect().map(m => (m.doc_id, m.content.toSeq)).toSet
+    def direct(d: String) =
+      rows(Tables.documents(spark, d).select(col("doc_id")).as[Long]
+        .map(payload))
+    def shuffles(ds: org.apache.spark.sql.Dataset[_]) =
+      (ds.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case plan => plan
+      }).collect { case e: ShuffleExchangeExec => e }
+
+    // sf0.001 documents is one parquet file: one split, spread to p tasks
+    assert(Tables.documents(spark, sf).rdd.getNumPartitions === 1)
+    val spread = ops.LlmQueries.mediaPayloads(spark, sf)(payload)
+    assert(spread.rdd.getNumPartitions === p)
+    assert(rows(spread) === direct(sf))
+
+    // the same documents written as p files read as p splits: no shuffle
+    val dir = java.nio.file.Files.createTempDirectory("graft_payloads")
+      .toString
+    Tables.documents(spark, sf).repartition(p)
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).rdd.getNumPartitions >= p)
+    val split = ops.LlmQueries.mediaPayloads(spark, dir)(payload)
+    assert(shuffles(split).isEmpty, split.queryExecution.executedPlan)
+    assert(shuffles(spread).nonEmpty, "the collector must see the spread")
+    assert(rows(split) === direct(dir))
+    assert(rows(split) === direct(sf))
+  }
 }

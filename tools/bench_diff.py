@@ -157,8 +157,8 @@ def main():
     # (the previous form) let a 40ms query regress 10x to 0.4s silently;
     # now floor(40ms) = 80ms and that regression fails, while floor(5s) =
     # 0.5s keeps real big-query regressions failing. Genuine sub-second
-    # jitter that still trips gets re-measured with warm reps by bench.sh
-    # (bench_triage) before anyone believes the number.
+    # jitter has already been re-measured with warm reps by Bench's own
+    # triage before the artifact reaches this gate.
     # The delta floor is applied on the calib-adjusted new time so a box
     # that is uniformly 1.5x slower doesn't push every small query over
     # its own floor.
@@ -198,7 +198,7 @@ def main():
         print(f"bench_diff: FAIL — {len(regressed)} queries regressed "
               f">{threshold}x after box-calibration normalization "
               f"(calib ratio {calib_ratio:.2f}x already divided out; "
-              f"re-run warm reps via bench_triage before believing it)")
+              f"Bench's warm-rep triage already applied)")
         return 1
     print(f"bench_diff: OK — no query regressed >{threshold}x "
           f"(calib-normalized)")

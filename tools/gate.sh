@@ -18,7 +18,7 @@ if [ "${GRAFT_SKIP_SF01:-0}" != "1" ]; then
   SF01_DIR="/root/testdata/sf0.1"
   OUT01_DIR="/tmp/graft_verify_sf01"
   rm -rf "$OUT01_DIR"
-  SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF01_DIR $OUT01_DIR"
+  SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.Verify $SF01_DIR $OUT01_DIR"
   python3 tools/check.py "$SF01_DIR" "$OUT01_DIR" tools/sf01_overrides.json --jobs 12
   echo "SF01 GATE GREEN ($SF01_DIR)"
 fi
